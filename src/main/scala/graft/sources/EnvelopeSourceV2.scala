@@ -9,7 +9,7 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapabil
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, CountStar}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownAggregates, SupportsPushDownFilters, SupportsPushDownLimit, SupportsPushDownRequiredColumns}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, In, StringStartsWith}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -252,10 +252,21 @@ private[sources] object EnvelopeOffset {
   * Files must be immutable once visible — the producer's
   * write-then-rename part files are. Column pruning flows through
   * from the scan builder; a not-yet-existing directory reads as empty
-  * (a feed may start publishing after the query starts). */
+  * (a feed may start publishing after the query starts).
+  *
+  * `Trigger.AvailableNow` is supported natively: the listing taken in
+  * [[prepareForTriggerAvailableNow]] caps every later offset, so a
+  * run delivers exactly the files present when it started and stops.
+  * A batch an earlier run planned but did not commit is replayed
+  * first; the files that arrived since follow in the next batch of
+  * the same run. Files published during the run wait for the next
+  * one. */
 private[sources] class EnvelopeMicroBatchStream(path: String,
                                                 fields: Array[String])
-  extends MicroBatchStream {
+  extends MicroBatchStream with SupportsTriggerAvailableNow {
+
+  /** The listing an AvailableNow run is capped at; None otherwise. */
+  private var availableNow: Option[Seq[String]] = None
 
   private def listNow(): Seq[String] = {
     val dir = new java.io.File(path)
@@ -272,6 +283,13 @@ private[sources] class EnvelopeMicroBatchStream(path: String,
 
   override def initialOffset(): Offset = EnvelopeOffset(Seq.empty)
   override def latestOffset(): Offset = EnvelopeOffset(listNow())
+
+  override def latestOffset(start: Offset, limit: ReadLimit): Offset =
+    availableNow.fold(latestOffset())(EnvelopeOffset(_))
+
+  override def prepareForTriggerAvailableNow(): Unit =
+    availableNow = Some(listNow())
+
   override def deserializeOffset(json: String): Offset = EnvelopeOffset.read(json)
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {

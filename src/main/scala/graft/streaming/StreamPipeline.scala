@@ -8,6 +8,7 @@ import org.apache.spark.sql.Row
 
 import graft.functions.TextOps
 import graft.ml.SentimentScorer
+import graft.plans.BatchConstant
 
 /** The reference's streaming serving path re-expressed Spark-first
   * (SURVEY.md §2a/2i): schema'd JSON envelope decode → clean/tokenize
@@ -37,25 +38,42 @@ object StreamPipeline {
   def envelope(text: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     to_json(struct(TextOps.scrubCommas(text).as("message")))
 
+  /** Envelope decode: a `value` column (binary or string) → the
+    * `message` of every well-formed envelope, one row per line that
+    * carries a non-null `message` (P1–P3).
+    *
+    * Each line is parsed once: the decoded struct is exploded by
+    * `inline(array(...))`, so the null drop filters the generator's
+    * output. Spelled as `.select(from_json(...).message)` and
+    * `na.drop()`, the optimizer pushes the filter below the projection
+    * and substitutes the alias, which parses every line twice. A
+    * malformed envelope decodes to a null `message` either way and is
+    * dropped. */
+  def decode(df: DataFrame): DataFrame =
+    df.select(inline(array(from_json(col("value").cast("string"), EnvelopeSchema))))
+      .na.drop()
+
   /** Decode + clean + score. Input: streaming or batch DataFrame with
     * a `value` column (binary or string). Output columns:
     * `message`, `cleaned_data`, `prediction`, `created_at`.
     *
     * Implements the *intended* reference semantics (clean the decoded
     * `message` field); `consumer_local.py:49` as-written cleans the
-    * raw envelope — see [[transformAsWritten]] and SURVEY.md §2g. */
-  def transform(df: DataFrame, scorer: SentimentScorer): DataFrame = {
-    val decoded = df
-      .select(col("value").cast("string").as("raw"))          // P1
-      .withColumn("value", from_json(col("raw"), EnvelopeSchema)) // P2/F2
-      .select(col("value.message").as("message"))
-      .na.drop()                                              // P3
-    scorer.scoreText(decoded, "message")                      // P4 + M1-M5
-      .withColumn("created_at",
-        date_format(current_timestamp(), "EEE MMM dd HH:mm:ss zzz yyyy"))
+    * raw envelope — see [[transformAsWritten]] and SURVEY.md §2g.
+    *
+    * `created_at` is the micro-batch's clock, formatted as the
+    * reference does (`EEE MMM dd HH:mm:ss zzz yyyy`, session time
+    * zone): one value for every row of a batch, later for each later
+    * batch (to the second). It is wrapped in [[graft.plans.BatchConstant]],
+    * which formats it once per task and keeps the batch timestamp out
+    * of the generated source, so a running query compiles its serving
+    * chain once rather than once per batch. */
+  def transform(df: DataFrame, scorer: SentimentScorer): DataFrame =
+    scorer.scoreText(decode(df), "message")                   // P4 + M1-M5
+      .withColumn("created_at", BatchConstant.of(
+        date_format(current_timestamp(), "EEE MMM dd HH:mm:ss zzz yyyy")))
       .select(col("message"), col("cleaned_data"),
         col("prediction"), col("created_at"))
-  }
 
   /** Strict as-written parity mode: the UDF input is the raw envelope
     * string, so a constant "message" token prefixes every doc
@@ -85,10 +103,12 @@ object StreamPipeline {
 
   /** S6/S7 foreachBatch sink (`consumer_mongo.py:10-13`,
     * `consumer_delta.py:11-13`): per micro-batch batch-writer,
-    * at-least-once. The in-repo writer appends parquet partitioned by
-    * `batch_id`, making replays idempotent-by-inspection (the
-    * reference's mongo/delta appends are not): a restarted batch
-    * overwrites its own partition instead of duplicating rows.
+    * at-least-once. The in-repo writer keeps one parquet leaf per
+    * batch, `<path>/batch_id=<id>`, making replays
+    * idempotent-by-inspection (the reference's mongo/delta appends are
+    * not): a restarted batch overwrites its own leaf instead of
+    * duplicating rows. Readers of `<path>` see a table partitioned by
+    * `batch_id` (an int column, by partition discovery).
     *
     * `mergeSchema` semantics (the reference's delta sink sets
     * `mergeSchema=true`, `consumer_delta.py:13`): before writing, the
@@ -105,33 +125,50 @@ object StreamPipeline {
       .option("checkpointLocation", checkpoint)
       .foreachBatch(mergeSchemaParquetWriter(path))
 
+  /** The partition column of [[toForeachBatchParquet]]'s table: it
+    * lives in the leaf directory names, never in the files. */
+  private val BatchIdColumn = "batch_id"
+
   /** The per-batch writer behind [[toForeachBatchParquet]], exposed so
     * the schema-union semantics are testable without stream plumbing
     * (a real evolution arrives across restarts that continue the
     * checkpoint's batch counter).
     *
+    * Batch `id` is written with mode overwrite straight into its own
+    * leaf, `<path>/batch_id=<id>`: a replay of the batch (a restart
+    * after a crash between this write and the checkpoint's commit)
+    * deletes the leaf and writes it again, so the table holds the
+    * batch once, and no other leaf is touched. The batch id reaches
+    * the files only through the directory name (a `batch_id` column of
+    * the batch itself is dropped), so the generated write code is the
+    * same text every batch and compiles once per query, and the write
+    * needs no staging directory or rename.
+    *
     * The on-disk footer probe runs ONCE per writer (first batch after
     * start/restart); afterwards the accumulated union schema is
     * carried in the writer closure, so per-batch cost stays O(1)
-    * instead of re-listing every previously written partition — a
-    * long-running stream adds one partition per batch, and a per-batch
+    * instead of re-listing every previously written leaf — a
+    * long-running stream adds one leaf per batch, and a per-batch
     * full-table probe would grow quadratically in aggregate. Correct
     * because this writer is the table's only producer between
-    * restarts. */
+    * restarts. The probe's partition discovery types `batch_id` as
+    * int; being no column of the files, it stays out of the
+    * alignment. */
   def mergeSchemaParquetWriter(path: String): (DataFrame, Long) => Unit = {
     import org.apache.spark.sql.catalyst.expressions.Cast
-    // accumulated union schema; None until first probe
+    // accumulated union schema of the files; None until first probe
     var known: Option[StructType] = None
     (batch: DataFrame, batchId: Long) => {
-      val withId = batch.withColumn("batch_id", lit(batchId))
+      val data = batch.drop(BatchIdColumn)
       if (known.isEmpty) {
         known = scala.util.Try(
           batch.sparkSession.read.option("mergeSchema", "true")
-            .parquet(path).schema).toOption
+            .parquet(path).schema)
+          .toOption.map(s => StructType(s.filterNot(_.name == BatchIdColumn)))
       }
-      val aligned = known.fold(withId) { old =>
-        val batchTypes = withId.schema.fields.map(f => f.name -> f.dataType).toMap
-        old.fields.foldLeft(withId) { (d, f) =>
+      val aligned = known.fold(data) { old =>
+        val batchTypes = data.schema.fields.map(f => f.name -> f.dataType).toMap
+        old.fields.foldLeft(data) { (d, f) =>
           batchTypes.get(f.name) match {
             // column the table has but this batch lacks: typed null
             case None => d.withColumn(f.name, lit(null).cast(f.dataType))
@@ -151,10 +188,7 @@ object StreamPipeline {
         }
       }
       known = Some(aligned.schema) // fold this batch's new columns in
-      aligned.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(path)
+      aligned.write.mode("overwrite").parquet(s"$path/$BatchIdColumn=$batchId")
     }
   }
 

@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 
 import graft.sources.EnvelopeFeed
 
@@ -145,6 +146,33 @@ class EnvelopeSourceV2Spec extends AnyFunSuite with SparkSessionFixture {
     assert(lines.length == 4, lines.mkString("; "))
     assert(lines.count(_.contains("wave three")) == 1, lines.mkString("; "))
     q2.stop()
+  }
+
+  test("AvailableNow after a crash replays the uncommitted batch, then drains new files") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("env_v2an").toString
+    val cp = Files.createTempDirectory("env_v2an_cp").toString
+    val out = Files.createTempDirectory("env_v2an_out").toString
+    def runOnce(): Unit = spark.readStream.format("graft-envelope").load(dir)
+      .select(col("value"))
+      .writeStream.format("text").trigger(Trigger.AvailableNow())
+      .option("path", out).option("checkpointLocation", cp).start()
+      .awaitTermination()
+
+    EnvelopeFeed.publishWave(Seq("file one").toDF("t"), "t", dir)
+    runOnce()
+    EnvelopeFeed.publishWave(Seq("file two").toDF("t"), "t", dir)
+    runOnce()
+    // a crash after walCommit: batch 1's offsets are logged, its
+    // commit (and the commit's checksum file) is not
+    for (f <- Seq("1", ".1.crc")) Files.deleteIfExists(java.nio.file.Paths.get(cp, "commits", f))
+    EnvelopeFeed.publishWave(Seq("file three").toDF("t"), "t", dir)
+    runOnce()
+    val lines = spark.read.text(out).collect().map(_.getString(0)).toSeq
+    for (f <- Seq("file one", "file two", "file three"))
+      assert(lines.count(_.contains(f)) == 1, lines.mkString("; "))
+    assert(lines.length == 3, lines.mkString("; "))
+    assert(Files.exists(java.nio.file.Paths.get(cp, "commits", "2")))
   }
 
   test("missing path fails at planning with a clear error") {
